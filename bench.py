@@ -86,9 +86,8 @@ HEADLINE = [
 ]
 
 
-def run_extraction(spark, tier: str = "sf-bench", weights=None) -> tuple[float, int]:
-    """End-to-end extraction (incl. parquet sink) → (seconds, n_docs).
-    weights: optional override (e.g. the model-realistic bench weights)."""
+def run_extraction(spark, tier: str = "sf-bench") -> tuple[float, int]:
+    """End-to-end extraction (incl. parquet sink) → (seconds, n_docs)."""
     from manuscript_ocr_spark.fixtures import ensure_tier
     from manuscript_ocr_spark.pipeline import extract_spans, load_fixture_tables
 
@@ -98,7 +97,7 @@ def run_extraction(spark, tier: str = "sf-bench", weights=None) -> tuple[float, 
     out_dir = tempfile.mkdtemp(prefix="msocr_bench_")
     try:
         t0 = time.time()
-        extract_spans(docs, media, weights=weights).write.mode("overwrite").parquet(
+        extract_spans(docs, media).write.mode("overwrite").parquet(
             f"{out_dir}/out"
         )
         dt = time.time() - t0

@@ -513,13 +513,9 @@ def ensure_tier(tier: str = "sf-small", base_dir: str = None) -> str:
     sizes = {
         "sf-small": dict(n_docs=200, n_pages=60),
         "sf-bench": dict(n_docs=40000, n_pages=6000),
-        # model-realistic scaling tier: enough pages to fan out 32 cores at
-        # ~0.6 s/page real-EAST cost without making the N=4 level take all
-        # session (960 pages ≈ 18 s at local[32], ~2.5 min at local[4])
-        "sf-realistic": dict(n_docs=6000, n_pages=960),
     }
     cfg = sizes[tier]
-    if tier in ("sf-bench", "sf-realistic"):
+    if tier == "sf-bench":
         # bench tier reuses sf-small's page pool; expected oracle output is
         # only needed for the pytest invariant (sf-small)
         marker = os.path.join(out_dir, "docs.parquet")

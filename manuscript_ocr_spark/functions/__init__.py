@@ -3,73 +3,44 @@ duckdb_sql_or_None)}; builders take (spark, sf_dir) → DataFrame."""
 
 from . import dedup, multimodal, ocr, relational, similarity, text
 
-# ---------------------------------------------------------------------------
-# Gate-window rotation (round-6 verdict items 1 + 8).
-#
-# The driver's correctness gate covers a bounded PREFIX of all_queries()
-# (r3-r6 recorded exactly the first 50 entries). With 85 registry queries
-# and a 50-row window, membership is now an EXPLICIT name list rather than
-# an emergent property of module/dict ordering, and the policy is:
-#
-#   1. NEW or CHANGED operators always enter the next round's window —
-#      nothing ships without a driver hash row from its first round.
-#   2. The flagship OCR queries (3) stay pinned every round.
-#   3. Everything else rotates: each round's window brings back the
-#      queries whose newest driver row is oldest (the previous round's
-#      parked set), parking last round's green rows instead.
-#   4. Growth caveat, accepted and documented: with >100 registry queries
-#      even perfect alternation leaves some stable suites with two-round-
-#      old driver rows. The compensating control is the judge's own
-#      check_oracle rerun of the parked set each round (r5, r6 both ran
-#      it); the pinned set stays small (flagship + part of mm) so the
-#      rotating capacity stays near 47.
-#
-# r7 window (50): the 22 rel + 7 sim queries parked in r6 (their newest
-# rows are r5), the SIX operators built in r6 but registered only now
-# (mixture plan/draw, prepare_corpus, BPE learn/tokenize, semantic
-# contamination — round-6 verdict item 1: they had no driver row), the
-# SEVEN operators new this round (batched BPE trainer, BPE vocab, BPE
-# encode, BPE pack stats, LM surprisal scoring, the per-source quality
-# report, the extraction→corpus-prep composition), the pinned flagship
-# ocr trio, and 5 of the 12 mm codec queries. Parked (42, all
-# r6-green): text 16, dedup 10, sim 9, mm 7. union(r06, r07) covers
-# all 92.
-# ---------------------------------------------------------------------------
+# The correctness gate covers the first WINDOW_SIZE entries of
+# all_queries(), so window membership is this explicit list. Policy:
+#   1. new or changed operators enter the next window;
+#   2. the flagship OCR queries stay pinned;
+#   3. the rest rotate: the longest-parked queries come back in place of
+#      the rows that were green last time.
 GATE_WINDOW = [
-    # pinned flagship (policy 2)
+    # flagship (pinned)
     "ocr_extract_spans",
     "ocr_dangling_refs",
     "ocr_gt_geometry",
-    "ocr_prepare_corpus",  # NEW in r7 (extraction → selection → mixing →
-    #                        draw, the flagship composition — round-6
-    #                        verdict item 3)
-    # new registrations (policy 1): r6-built, first driver rows this round
+    "ocr_prepare_corpus",
+    # new or changed operators
+    "dedup_jaccard_verify",
+    "dedup_ngram_jaccard_pairs",
+    "dedup_components",
+    "dedup_keep_list",
+    "sim_semantic_dup_keep",
+    "text_corpus_select",
     "text_mixture_plan",
     "text_mixture_draw",
     "text_prepare_corpus",
     "text_bpe_learn_merges",
-    "text_bpe_learn_merges_batched",  # NEW in r7 (the production-vocab
-    #                                   trainer — round-6 verdict item 2)
+    "text_bpe_learn_merges_batched",
     "text_bpe_tokenize_stats",
-    "text_bpe_vocab",  # NEW in r7 (id-stable tokenizer artifact —
-    #                    round-6 verdict item 7)
-    "text_bpe_encode",  # NEW in r7 (the tokenized corpus: per-doc
-    #                     token-id streams under the trained vocab)
-    "text_bpe_pack_stats",  # NEW in r7 (fixed-length packed-sequence
-    #                         accounting over the encode stream)
-    "text_lm_logprob",  # NEW in r7 (CCNet-style unigram LM surprisal
-    #                     quality signal)
-    "text_quality_report",  # NEW in r7 (per-source curation dashboard)
+    "text_bpe_vocab",
+    "text_bpe_encode",
+    "text_bpe_pack_stats",
+    "text_lm_logprob",
+    "text_quality_report",
     "sim_semantic_contamination",
-    # rotated back in (policy 3): parked in r6, newest driver rows r5
+    # rotating
     "rel_pricing_summary",
     "rel_promo_revenue",
     "rel_supplier_value",
     "rel_session_windows",
     "rel_json_props_stats",
     "rel_source_lang_cube",
-    "rel_anti_join_window_shoppers",
-    "rel_distinct_user_counts",
     "rel_asof_join",
     "rel_rollup_revenue",
     "rel_regional_revenue",
@@ -78,12 +49,8 @@ GATE_WINDOW = [
     "rel_quantize_dedup",
     "rel_length_percentiles",
     "rel_anomaly_filter",
-    "rel_get_text_analog",
     "rel_window_rank",
     "rel_join_revenue",
-    "rel_hourly_events",
-    "rel_validation_counts",
-    "rel_event_funnel",
     "sim_cosine_topk",
     "sim_knn_join",
     "sim_dup_keep_list",
@@ -91,24 +58,11 @@ GATE_WINDOW = [
     "sim_cosine_dup_pairs",
     "sim_lsh_ann_topk",
     "sim_lsh_buckets",
-    # pinned mm codec suite (r6-green; rotates out first when new
-    # operators need window slots — see policy 4)
     "mm_media_decode_stats",
     "mm_media_png_stats",
     "mm_media_prog_stats",
-    # mm_media_thumbnails rotated out (r6-green, policy 4) to admit
-    # text_bpe_pack_stats
-    # mm_media_frame_sample rotated out (r6-green, policy 4) to admit
-    # text_bpe_encode
-    # mm_audio_decode_stats rotated out (r6-green, policy 4) to admit
-    # text_quality_report
-    # mm_audio_frame_windows rotated out (r6-green, policy 4) to admit
-    # text_lm_logprob
     "mm_audio_mp3_stats",
     "mm_video_mp4_stats",
-    # mm_video_mp4_frames, mm_audio_mp3_frames and mm_video_mp4_pcm_stats
-    # rotated out (r6-green, policy 4) to admit ocr_prepare_corpus,
-    # text_bpe_learn_merges_batched and text_bpe_vocab
 ]
 
 WINDOW_SIZE = 50

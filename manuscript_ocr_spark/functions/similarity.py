@@ -133,12 +133,6 @@ WHERE list_sum(list_transform(list_zip(a.v, b.v), s -> s[1] * s[2]))
 """
 
 
-def _plane_sign(d: int, j: int) -> int:
-    """Deterministic ±1 hyperplane component for dimension d, plane j —
-    parity of a fixed integer mix, identical in the SQL mirror."""
-    return 1 if ((d * 31 + j * 17) % 7) % 2 == 0 else -1
-
-
 def lsh_buckets(spark, sf_dir):
     """Random-hyperplane LSH bucket per vector (the ANN scale path)."""
     emb = _emb(spark, sf_dir).select("vec_id", F.col("embedding").alias("v"))
@@ -414,6 +408,22 @@ def kmeans_centroids_fxp(emb, k: int = KMEANS_K, iters: int = KMEANS_ITERS):
     return cents
 
 
+def _ddl_column_names(schema: str) -> list:
+    """Column names of a DDL schema string, split on top-level commas only
+    (nested types such as array<struct<a:int,b:int>> or decimal(10,2) stay
+    whole)."""
+    names, depth, start = [], 0, 0
+    for i, ch in enumerate(schema + ","):
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            names.append(schema[start:i].split()[0])
+            start = i + 1
+    return names
+
+
 def _literal_df(spark, rows, schema: str):
     """Small literal frame via the Arrow path (pandas input): a plain
     createDataFrame(list) ships pickled rows that executors must spin a
@@ -423,7 +433,7 @@ def _literal_df(spark, rows, schema: str):
     try:
         import pandas as pd
 
-        cols = [f.strip().split()[0] for f in schema.split(",")]
+        cols = _ddl_column_names(schema)
         pdf = pd.DataFrame(rows, columns=cols)
         return spark.createDataFrame(pdf, schema)
     except Exception:

@@ -105,10 +105,6 @@ def _fdct(block: np.ndarray) -> np.ndarray:
     return _C @ block @ _C.T
 
 
-def _idct(coef: np.ndarray) -> np.ndarray:
-    return _C.T @ coef @ _C
-
-
 # --- canonical Huffman ------------------------------------------------------
 
 def _build_codes(counts, symbols):

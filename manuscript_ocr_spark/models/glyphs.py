@@ -106,20 +106,6 @@ def serialize_weights(weights: dict) -> bytes:
         from .loader import serialize_real_weights
 
         return serialize_real_weights(weights)
-    if weights.get("kind") == "realistic_bench":
-        # stand-in bank + the calibrated-burn EAST tensors, one blob
-        buf = io.BytesIO()
-        arrays = {
-            "__realistic__": np.array(1),
-            "__bench_ts__": np.array(weights["bench_target_size"]),
-            "standin": np.frombuffer(
-                serialize_weights(weights["standin"]), dtype=np.uint8
-            ),
-        }
-        for k, v in weights["east"]["tensors"].items():
-            arrays[f"east::t::{k}"] = v
-        np.savez_compressed(buf, **arrays)
-        return buf.getvalue()
     buf = io.BytesIO()
     np.savez_compressed(
         buf,
@@ -138,19 +124,6 @@ def deserialize_weights(blob: bytes) -> dict:
         from .loader import deserialize_real_weights
 
         return deserialize_real_weights(data)
-    if "__realistic__" in data.files:
-        return {
-            "kind": "realistic_bench",
-            "bench_target_size": int(data["__bench_ts__"]),
-            "standin": deserialize_weights(data["standin"].tobytes()),
-            "east": {
-                "kind": "east_state",
-                "tensors": {
-                    k[len("east::t::"):]: data[k]
-                    for k in data.files if k.startswith("east::t::")
-                },
-            },
-        }
     itos = [str(s) for s in data["itos"]]
     stoi = {s: i for i, s in enumerate(itos)}
     return {

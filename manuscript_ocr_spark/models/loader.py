@@ -1,12 +1,11 @@
 """Real-model weights-loader contract (SURVEY.md §9.4).
 
-The sandbox executes the seeded glyph stand-ins (no torch here), but a
-production swap to the reference's real EAST/TRBA checkpoints must be
-DATA-only: this module declares the exact state_dict layout the reference
-models produce, validates a checkpoint against it in pure numpy, and packs
-it into the same broadcast/serialize shape the pipeline already ships.
-When a torch-side kernel is plugged in (same predict() contract), nothing
-else in the pipeline changes — weights still arrive as one broadcast blob.
+The default pipeline executes the seeded glyph stand-ins, but a swap to the
+reference's real EAST/TRBA checkpoints must be DATA-only: this module
+declares the exact state_dict layout the reference models produce,
+validates a checkpoint against it in pure numpy, and packs it into the same
+broadcast/serialize shape the pipeline already ships. models/numpy_twins.py
+executes the result; weights still arrive as one broadcast blob.
 
 Layouts transcribed from the reference:
 - EAST decoder blocks + output head:
@@ -210,8 +209,9 @@ def build_real_weights(
 ) -> dict:
     """Combined real-model weights for pipeline.extract_spans(weights=...):
     both checkpoints validated/converted, plus the charset and the dotted
-    'module:callable' path of the SE-ResNet-31 backbone factory
-    (factory(cnn_tensors) → forward callable; see torch_twins docstring).
+    'module:callable' path of an optional SE-ResNet-31 backbone factory
+    (factory(cnn_tensors) → numpy forward(NCHW batch) → (B, 512, H', W');
+    without it numpy_twins runs the built-in backbone over cnn.* tensors).
     The result serializes to ONE broadcast npz like the stand-in bank."""
     east = convert_state_dict(east_state_dict, "east")
     trba = convert_state_dict(

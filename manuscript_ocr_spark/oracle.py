@@ -115,61 +115,37 @@ def page_to_line_texts(
 
     Dispatch seam: weights['kind'] == 'real_models' (loader.build_real_weights,
     a converted EAST+TRBA checkpoint pair) routes detect/recognize through
-    the torch twins (models.torch_twins) when torch is importable, else the
-    pure-numpy twins (models.numpy_twins — same converted tensors, torch
-    eval-mode numerics, built-in SE-ResNet-31 so cnn_factory is optional).
-    Same contracts, real nets; anything else takes the deterministic
-    stand-ins. Nothing downstream differs.
+    the pure-numpy twins (models.numpy_twins — torch eval-mode numerics,
+    built-in SE-ResNet-31 so cnn_factory is optional). Same contracts, real
+    nets; anything else takes the deterministic stand-ins. Nothing
+    downstream differs.
     """
-    if weights.get("kind") == "realistic_bench":
-        # model-realistic bench tier: burn one calibrated real-EAST numpy
-        # forward per page (cost only), then produce the DETERMINISTIC
-        # stand-in output — identical spans, realistic compute fraction
-        from .models.numpy_twins import realistic_burn
-
-        realistic_burn(image, weights)
-        return page_to_line_texts(image, weights["standin"], cfg, min_text_size)
     if weights.get("kind") == "real_models":
-        from .models.torch_twins import HAVE_TORCH
+        from .models import numpy_twins as twins
 
         # reference predict() defaults to beam (__init__.py:290-300);
-        # weights['decoding'] selects it here. The torch twin only wires
-        # greedy, so beam routes through the numpy twin (same converted
-        # tensors, same numerics).
+        # weights['decoding'] selects it here.
         decoding = weights.get("decoding", "greedy")
-        use_torch = (
-            HAVE_TORCH and weights.get("cnn_factory") and decoding == "greedy"
-        )
-        if use_torch:
-            from .models import torch_twins as twins
-        else:
-            from .models import numpy_twins as twins
-            if decoding != "greedy" and not any(
-                k.startswith("cnn.") for k in weights["trba"]["tensors"]
-            ):
-                # a cnn_factory forward is torch-contract (tensor in/out) —
-                # it cannot serve the numpy beam path, and without cnn.*
-                # passthrough tensors the numpy twin's built-in SE-ResNet-31
-                # has nothing to run. Fail HERE with a clear message rather
-                # than letting every executor task crash on a
-                # numpy-into-torch TypeError.
-                raise ValueError(
-                    f"decoding={decoding!r} runs on the numpy twin, which "
-                    "needs the checkpoint's cnn.* tensors (the torch "
-                    "cnn_factory forward is tensor-contract and cannot be "
-                    "reused); this checkpoint carries none"
-                )
+        if decoding != "greedy" and not any(
+            k.startswith("cnn.") for k in weights["trba"]["tensors"]
+        ):
+            # beam never resolves the cnn_factory, and without cnn.*
+            # passthrough tensors the built-in SE-ResNet-31 has nothing to
+            # run. Fail HERE with a clear message rather than letting every
+            # executor task crash.
+            raise ValueError(
+                f"decoding={decoding!r} runs on the numpy twin, which "
+                "needs the checkpoint's cnn.* tensors (the torch "
+                "cnn_factory forward is tensor-contract and cannot be "
+                "reused); this checkpoint carries none"
+            )
 
         quads = twins.detect_quads(image, cfg, weights["east"])
 
         def _recognize(crops):
-            # greedy keeps the pre-existing contract: the factory product
-            # serves whichever twin was selected (with torch absent, a
-            # present factory is necessarily numpy-contract). Beam is the
-            # one divergence: it can force the numpy twin while torch IS
-            # importable, where the factory product is torch-contract and
-            # would crash inside numpy — so beam always runs the built-in
-            # cnn.* backbone and never resolves the factory.
+            # greedy lets a cnn_factory product (numpy contract) replace
+            # the built-in backbone; beam always runs the built-in cnn.*
+            # backbone and never resolves the factory.
             cnn = None
             if decoding == "greedy" and weights.get("cnn_factory"):
                 cnn = weights.get("_cnn_forward")

@@ -345,12 +345,9 @@ def extract_spans(
         weights = build_weights()
     if weights.get("kind") == "real_models":
         # validate on the DRIVER, not as a storm of executor tracebacks.
-        # The real-model path runs on torch (twins) when available, else the
-        # pure-numpy twins — which execute the checkpoint's cnn.* tensors
-        # through the built-in SE-ResNet-31, so torch is no longer required.
-        # What IS required: a resolvable recognizer backbone — either a
-        # cnn_factory dotted path or cnn.* passthrough tensors (r3 ADVICE:
-        # cnn_factory=None used to die per-task on executors).
+        # The real-model path runs on the pure-numpy twins, which need a
+        # resolvable recognizer backbone: either a cnn_factory dotted path
+        # or cnn.* passthrough tensors for the built-in SE-ResNet-31.
         if not any(k.startswith("backbone.") for k in weights["east"]["tensors"]):
             raise ValueError(
                 "real_models EAST weights carry no backbone.* tensors; the "

@@ -1,10 +1,11 @@
 """SparkSession factory with the engine's tuned defaults.
 
 Scale posture: AQE on (runtime shuffle coalescing + skew-join splitting),
-small Arrow batches for the media path (page payloads are ~1.2 MB/row —
+small Arrow batches for the media path (page payloads are ~0.36 MB/row —
 the default 10k-records-per-batch would materialize gigabytes per Arrow
-transfer), zstd parquet output. On a real cluster the same confs apply via
-spark-submit --conf; master comes from the environment there.
+transfer), zstd parquet output, a driver heap sized from the host's RAM.
+On a real cluster the same confs apply via spark-submit --conf; master
+comes from the environment there.
 """
 
 from __future__ import annotations
@@ -13,11 +14,30 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MB_PER_UNIT = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def _driver_memory_mb() -> int:
+    """$SPARK_GRAFT_DRIVER_MEM (a JVM size such as 8g or 4096m) if set, else
+    half of physical RAM capped at 24g — local-mode driver == executor, and
+    the Python workers need the other half."""
+    size = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "").strip().lower()
+    size = size.removesuffix("b")  # Spark also accepts 8gb / 4096mb
+    if size:
+        # Spark reads a bare number as MiB
+        unit = size[-1] if size[-1] in _MB_PER_UNIT else "m"
+        return int(float(size.rstrip("kmgt")) * _MB_PER_UNIT[unit])
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return min(24 * 1024, ram // 2 // 2**20)
+
+
+_DRIVER_MB = _driver_memory_mb()
+
 DEFAULT_CONFS = {
-    # local-mode driver == executor; the default 1g heap cannot shuffle
-    # binary page payloads (must be set before the JVM launches)
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-    "spark.driver.maxResultSize": "4g",
+    # the default 1g heap cannot shuffle binary page payloads (must be set
+    # before the JVM launches); collected results get a quarter of it
+    "spark.driver.memory": f"{_DRIVER_MB}m",
+    "spark.driver.maxResultSize": f"{max(1, _DRIVER_MB // 4)}m",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -29,9 +49,10 @@ DEFAULT_CONFS = {
     # shuffle (pipeline.ocr_media_lines)
     "spark.sql.files.maxPartitionBytes": "512k",
     "spark.sql.files.openCostInBytes": "128k",
-    # media rows carry ~1.2MB binary payloads; bound Arrow batch memory
-    # (64 rows ≈ 75MB — big enough to amortize per-batch overheads, small
-    # enough that 32 concurrent workers stay well inside the heap)
+    # media rows carry ~0.36MB binary payloads (a traced 160-page
+    # extract_spans sent 58MB to Python); bound Arrow batch memory (64 rows
+    # ≈ 23MB — big enough to amortize per-batch overheads, small enough that
+    # one worker per core stays well inside the heap)
     "spark.sql.execution.arrow.maxRecordsPerBatch": "64",
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.session.timeZone": "UTC",

@@ -1,8 +1,8 @@
 """Sources / sinks (SURVEY.md §2.1).
 
-Readers: parquet fixture tables (S1-S2 analog: the media table IS the
-decodable image source; binary-file directory scans map to
-spark.read.format('binaryFile') when images live on a filesystem).
+Readers: the parquet media table IS the decodable image source (S1-S2
+analog; pipeline.load_fixture_tables reads it); binary-file directory scans
+map to spark.read.format('binaryFile') when images live on a filesystem.
 Sinks: extraction output parquet (pipeline / checkpoint), visualization
 sink (S8), metrics sink (S9: split_ocr_metrics + checkpoint manifests).
 """
@@ -10,14 +10,6 @@ sink (S8), metrics sink (S9: split_ocr_metrics + checkpoint manifests).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def read_docs(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_media(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def read_binary_images(spark: SparkSession, dir_glob: str) -> DataFrame:

@@ -1212,3 +1212,23 @@ def test_ivf_kmeans_rebalance_storage_only(spark, tmp_path):
     assert os.path.basename(_cells_path(rebuilt)) == "cells.parquet"
     assert [tuple(r) for r in
             ivf_kmeans_search(spark, SF, rebuilt).collect()] == pre_src
+
+
+def test_literal_df_nested_schema_takes_arrow_path(spark, monkeypatch):
+    """Nested column types keep the pandas/Arrow path: the schema is split
+    on top-level commas only, so the pickle fallback (a list handed to
+    createDataFrame) must never run."""
+    from manuscript_ocr_spark.functions.similarity import _literal_df
+
+    create = spark.createDataFrame
+
+    def no_pickle_fallback(data, schema=None, *args, **kwargs):
+        assert not isinstance(data, list), "_literal_df took the pickle fallback"
+        return create(data, schema, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "createDataFrame", no_pickle_fallback)
+    rows = [(1, [{"a": 1, "b": 2}], {"k": 3}), (2, [], {"k": 4})]
+    df = _literal_df(spark, rows,
+                     "id int, xs array<struct<a:int,b:int>>, m struct<k:int>")
+    assert [(r["id"], [tuple(x) for x in r["xs"]], r["m"]["k"])
+            for r in df.orderBy("id").collect()] == [(1, [(1, 2)], 3), (2, [], 4)]

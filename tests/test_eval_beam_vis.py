@@ -165,6 +165,37 @@ def test_visualize_page_draws_boxes():
     assert (gray == STROKE).sum() == 0
 
 
+def test_write_visualizations_sink(spark, sf_small_dir, tmp_path):
+    """The S8 parquet sink over 2 sf-small pages: one row per page carrying
+    the input's width and height, and a vis payload that decodes to that
+    page shape."""
+    import pyarrow.parquet as pq
+
+    from manuscript_ocr_spark.fixtures import PAGE_SIZE
+    from manuscript_ocr_spark.kernels.vis import STROKE
+    from manuscript_ocr_spark.models import DetectorConfig, build_weights
+    from manuscript_ocr_spark.pipeline import load_fixture_tables
+    from manuscript_ocr_spark.sources import write_visualizations
+
+    _, media = load_fixture_tables(spark, sf_small_dir)
+    pages = media.orderBy("media_ref").limit(2).cache()
+    want = {r["media_ref"]: (r["width"], r["height"])
+            for r in pages.select("media_ref", "width", "height").collect()}
+    out = write_visualizations(pages, build_weights(),
+                               DetectorConfig(target_size=PAGE_SIZE),
+                               str(tmp_path / "vis"))
+    rows = pq.read_table(out).to_pylist()
+    assert len(want) == 2
+    assert sorted(r["media_ref"] for r in rows) == sorted(want)
+    for r in rows:
+        width, height = want[r["media_ref"]]
+        assert (r["width"], r["height"]) == (width, height)
+        assert r["vis"]
+        canvas = np.frombuffer(r["vis"], np.uint8).reshape(height, width)
+        assert (canvas == STROKE).any()  # boxes were drawn
+    pages.unpersist()
+
+
 def test_beam_diverges_from_greedy_on_early_eos_fixture():
     """Non-degenerate beam fixture (reference model.py:92-225 semantics):
     a beam that takes EOS at step 0 is frozen by the finished-beam masking

@@ -193,10 +193,8 @@ def test_page_to_line_texts_from_converted_checkpoint(real_weights):
     and deterministically — from a converted real-layout state_dict, with
     no torch in the environment."""
     from manuscript_ocr_spark.models.east_tiny import DetectorConfig
-    from manuscript_ocr_spark.models.torch_twins import HAVE_TORCH
     from manuscript_ocr_spark.oracle import page_to_line_texts
 
-    assert not HAVE_TORCH  # this sandbox: proves the numpy path serves
     img = np.full((128, 128), 255, np.uint8)
     img[30:50, 20:100] = 20
     img[70:90, 20:100] = 20

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from manuscript_ocr_spark.models.loader import (
+    build_real_weights,
     convert_state_dict,
     deserialize_model_weights,
     east_manifest,
@@ -103,3 +104,47 @@ def test_trba_manifest_keys_match_reference_source():
     for key in t:
         assert key.startswith(("attn.attention_cell.", "attn.generator.",
                                "enc_rnn.0.", "enc_rnn.1.")), key
+
+
+CHARSET = ["<PAD>", "<SOS>", "<EOS>"] + list("abc")
+
+
+def _real_weights(hidden=16):
+    east_sd = synthetic_state_dict(east_manifest())
+    trba_sd = synthetic_state_dict(trba_manifest(hidden, len(CHARSET)))
+    return build_real_weights(east_sd, trba_sd, CHARSET, hidden_size=hidden)
+
+
+def test_real_weights_broadcast_roundtrip():
+    """The combined checkpoint pair ships as ONE npz blob through the same
+    serialize/deserialize the stand-in bank uses."""
+    from manuscript_ocr_spark.models.glyphs import (
+        deserialize_weights,
+        serialize_weights,
+    )
+
+    w = _real_weights()
+    back = deserialize_weights(serialize_weights(w))
+    assert back["kind"] == "real_models"
+    assert back["itos"] == CHARSET
+    assert back["trba"]["hidden_size"] == 16 and back["trba"]["max_len"] == 25
+    assert set(back["east"]["tensors"]) == set(w["east"]["tensors"])
+    assert set(back["trba"]["tensors"]) == set(w["trba"]["tensors"])
+    np.testing.assert_array_equal(
+        back["east"]["tensors"]["output_head.geo_map.weight"],
+        w["east"]["tensors"]["output_head.geo_map.weight"],
+    )
+
+
+def test_real_models_fail_fast_on_driver():
+    """extract_spans(weights=real) must raise on the driver, before any job
+    is submitted, when the checkpoint has no runnable backbone (a
+    manifest-only checkpoint with no backbone.* tensors cannot run)."""
+    from manuscript_ocr_spark.fixtures import ensure_tier
+    from manuscript_ocr_spark.pipeline import extract_spans, load_fixture_tables
+    from manuscript_ocr_spark.session import get_spark
+
+    spark = get_spark(master="local[2]", app_name="twins-failfast")
+    docs, media = load_fixture_tables(spark, ensure_tier("sf-small"))
+    with pytest.raises(ValueError, match="backbone"):
+        extract_spans(docs, media, weights=_real_weights())

@@ -6,7 +6,6 @@ Writes BENCH/BASELINE.md. Two pairs are measured (4→16 and 8→32); the host
 is shared, so each level takes best-of-N trials to shed co-tenant noise.
 
 Usage: python tools/bench_scaling.py [tier] [trials]
-       python tools/bench_scaling.py realistic [trials]
        python tools/bench_scaling.py paired N 4N [reps] [tier]
 
 'paired' interleaves the two levels' trials ABAB in ONE window (each trial
@@ -15,14 +14,6 @@ the method that made BENCH/REALISTIC.md's numbers trustworthy. Sequential
 best-of-N levels can land in different windows and produce artifacts like
 efficiency > 1 (a loaded window at the small level). Appends a section to
 BENCH/BASELINE.md instead of overwriting it.
-
-'realistic' runs the MODEL-REALISTIC tier (round-4 verdict item #1): the
-sf-realistic fixture (6000 docs / 960 pages) with realistic_bench weights —
-the stand-in pipeline plus one calibrated real-architecture numpy EAST
-forward per page (~0.6 s single-thread, cf. the reference's published
-0.604 s/image detector mean) — so the compute fraction matches real models
-instead of the ~6x-cheaper stand-ins. Output spans are identical to the
-stand-in run (verified by test), only the per-page cost changes.
 """
 
 from __future__ import annotations
@@ -31,10 +22,12 @@ import datetime
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BASELINE_MD = os.path.join(REPO, "BENCH", "BASELINE.md")
+sys.path.insert(0, REPO)
 
 
-def run_at(cpus: int, tier: str, trials: int, weights=None):
+def run_at(cpus: int, tier: str, trials: int):
     from manuscript_ocr_spark.session import get_spark
     from bench import run_extraction
 
@@ -47,11 +40,11 @@ def run_at(cpus: int, tier: str, trials: int, weights=None):
     # warm the JVM JIT, python workers, and OS page cache so the measured
     # runs aren't paying one-time initialization; then best-of-N to shed
     # co-tenant noise on the shared host
-    run_extraction(spark, "sf-small", weights=weights)
+    run_extraction(spark, "sf-small")
     times = []
     n_docs = 0
     for _ in range(trials):
-        sec, n_docs = run_extraction(spark, tier, weights=weights)
+        sec, n_docs = run_extraction(spark, tier)
         times.append(sec)
     spark.stop()
     return min(times), times, n_docs
@@ -92,7 +85,7 @@ def paired_main():
 
     stamp = datetime.datetime.now(datetime.timezone.utc).strftime(
         "%Y-%m-%d %H:%M UTC")
-    with open("/root/repo/BENCH/BASELINE.md", "a") as f:
+    with open(BASELINE_MD, "a") as f:
         f.write(f"""
 ## Tightly-paired window: local[{n}] → local[{n4}] ({stamp})
 
@@ -116,13 +109,6 @@ def main():
         return
     tier = sys.argv[1] if len(sys.argv) > 1 else "sf-bench"
     trials = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    weights = None
-    realistic = tier == "realistic"
-    if realistic:
-        from manuscript_ocr_spark.models.numpy_twins import build_realistic_weights
-
-        tier = "sf-realistic"
-        weights = build_realistic_weights()
 
     results = {}
     all_trials = {}
@@ -133,15 +119,15 @@ def main():
 
     tier_dir = ensure_tier(tier)
     pages = pq.ParquetFile(f"{tier_dir}/media.parquet").metadata.num_rows
-    levels = (2, 8, 4, 16, 32) if realistic else (4, 16, 8, 32)
+    levels = (4, 16, 8, 32)
     for cpus in levels:
-        best, times, docs = run_at(cpus, tier, trials, weights=weights)
+        best, times, docs = run_at(cpus, tier, trials)
         results[cpus] = best
         all_trials[cpus] = times
         print(f"local[{cpus}]: best {best:.1f}s of {['%.1f' % t for t in times]}"
               f" → {docs / best:.1f} docs/sec")
 
-    pairs = [(2, 8), (4, 16), (8, 32)] if realistic else [(4, 16), (8, 32)]
+    pairs = [(4, 16), (8, 32)]
     lines = []
     for n, n4 in pairs:
         thr_n = docs / results[n]
@@ -153,18 +139,14 @@ def main():
             f"| {thr_n:.1f} → {thr_4n:.1f} docs/sec | **{eff:.3f}** |"
         )
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.dirname(BASELINE_MD), exist_ok=True)
     stamp = datetime.datetime.now(datetime.timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
     trial_rows = "\n".join(
         f"| local[{c}] | {', '.join('%.1f' % t for t in all_trials[c])} |"
         for c in levels
     )
-    out_path = (
-        "/root/repo/BENCH/REALISTIC.md" if realistic
-        else "/root/repo/BENCH/BASELINE.md"
-    )
-    with open(out_path, "w") as f:
-        f.write(f"""# BENCH/{'REALISTIC — model-realistic tier' if realistic else 'BASELINE'} — scaling efficiency evidence
+    with open(BASELINE_MD, "w") as f:
+        f.write(f"""# BENCH/BASELINE — scaling efficiency evidence
 
 {stamp} — identical extraction job (detect + recognize + span-reassemble +
 parquet sink) on identical input ({tier}: {docs} interleaved docs, {pages}
@@ -190,20 +172,12 @@ engine's full detect+recognize+reassemble pipeline sustains
 {docs / results[32]:.0f} docs/sec ({pages / results[32]:.0f} distinct
 pages/sec) at local[32] on CPU.
 
-{'This IS the model-realistic tier: each page additionally executes one '
- 'calibrated real-architecture numpy EAST forward (~0.6 s single-thread, '
- 'matching the reference detector cost class), so the compute fraction here '
- 'is representative of production models — the round-3 caveat about '
- 'stand-ins being ~6x too cheap does not apply to these numbers.'
- if realistic else
- 'Caveat recorded for honesty: the deterministic stand-in models are ~6x '
- 'cheaper per page than the reference real EAST+TRBA forward passes, so '
- 'fixed per-stage costs (Arrow transfer, scheduling) weigh proportionally '
- 'more here than they would with production models; the model-realistic '
- 'tier (python tools/bench_scaling.py realistic; BENCH/REALISTIC.md) '
- 'measures scaling with representative per-page cost.'}
+Caveat: the deterministic stand-in models are ~6x cheaper per page than
+the reference real EAST+TRBA forward passes, so fixed per-stage costs
+(Arrow transfer, scheduling) weigh proportionally more here than they would
+with production models.
 """)
-    print(f"wrote {out_path}")
+    print(f"wrote {BASELINE_MD}")
 
 
 if __name__ == "__main__":
