@@ -305,15 +305,17 @@ def _extracted_docs_materialized(spark, sf_dir):
     production shape: a 100 TB run lands extracted text in the lake, then
     prepares corpora from the table."""
     import os
+    import shutil
 
     from .similarity import _ann_index_dir, _gc_stale_tiers
 
     d = _fixture_dir()
+    name = "extcorpus-r8a"
     # fingerprint EVERY input of the extraction (round-7 ADVICE: keying on
     # docs.parquet alone reused a stale extracted corpus when media or the
     # expected-lines table regenerated without touching docs)
     idx = _ann_index_dir(
-        d, "extcorpus-r8a",
+        d, name,
         data_file=("docs.parquet", "media.parquet",
                    "expected_page_lines.parquet"))
     out = os.path.join(idx, "docs.parquet")
@@ -321,6 +323,15 @@ def _extracted_docs_materialized(spark, sf_dir):
         os.makedirs(idx, exist_ok=True)
         _extracted_docs(spark, sf_dir).write.mode("overwrite").parquet(out)
         _gc_stale_tiers(idx)
+        # a version bump strands every tier under the old name: best-effort
+        # removal of the sibling extcorpus-* names
+        root = os.path.dirname(os.path.dirname(idx))
+        try:
+            for sib in os.listdir(root):
+                if sib.startswith("extcorpus-") and sib != name:
+                    shutil.rmtree(os.path.join(root, sib), ignore_errors=True)
+        except OSError:
+            pass
     return spark.read.parquet(out)
 
 

@@ -1,6 +1,7 @@
 """Scale/robustness operators: salted bucketing + per-partition
-checkpoint/commit/resume (checkpoint.py), per-task OCR metrics
-(pipeline.split_ocr_metrics)."""
+checkpoint/commit/resume (checkpoint.py), whose manifests carry per-bucket
+rows/spans/files lineage taken from the write itself (one Observation plus
+the parquet footers)."""
 
 from .checkpoint import (
     bucket_of,

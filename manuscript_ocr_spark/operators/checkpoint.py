@@ -15,7 +15,9 @@ jobs would rescan the full input n_buckets times — 8× scan cost at 100 TB,
 with the cluster idle between jobs) and written `partitionBy(__bucket)` to a
 staging directory; each bucket directory is then atomically renamed into
 <out>/spans/bucket=<b>/ and its manifest JSON committed by atomic rename to
-<out>/_manifest/<b>.json. A rerun skips every bucket with a manifest and
+<out>/_manifest/<b>.json. The manifest's rows/spans come from an Observation
+on that one write and its per-file rows from the parquet footers, so the
+commits submit no Spark job. A rerun skips every bucket with a manifest and
 recomputes the rest in one new job; staged-or-renamed data without its
 manifest is overwritten (idempotent). Readers see only manifest-committed
 buckets. On Iceberg this maps 1:1 onto snapshot commits with bucket
@@ -29,7 +31,8 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import __version__
@@ -101,7 +104,6 @@ def extract_with_checkpoint(
     if not pending:
         return {"committed": committed, "skipped": skipped, "out_dir": out_dir}
 
-    spark = docs.sparkSession
     t0 = time.time()
     docs_in = docs
     if already:
@@ -114,9 +116,24 @@ def extract_with_checkpoint(
     out = extract_spans(docs_in, media, **extract_kwargs).withColumn(
         "__bucket", bucket_of(F.col("doc_id"), n_buckets)
     )
+    # per-bucket row and span counts ride the staged write itself, so the
+    # manifest commits below need no Spark job
+    lineage = Observation()
+    counts = []
+    for b in pending:
+        in_b = F.col("__bucket") == b
+        counts += [
+            F.count_if(in_b).alias(f"rows_{b}"),
+            F.coalesce(F.sum(F.when(in_b, F.size("spans"))), F.lit(0)).alias(
+                f"spans_{b}"
+            ),
+        ]
     staging = os.path.join(out_dir, "_staging")
-    out.write.mode("overwrite").partitionBy("__bucket").parquet(staging)
+    out.observe(lineage, *counts).write.mode("overwrite").partitionBy(
+        "__bucket"
+    ).parquet(staging)
     job_wall_ms = int((time.time() - t0) * 1000)
+    observed = lineage.get
 
     spans_root = os.path.join(out_dir, "spans")
     os.makedirs(spans_root, exist_ok=True)
@@ -125,32 +142,30 @@ def extract_with_checkpoint(
         dst = os.path.join(spans_root, f"bucket={b}")
         if os.path.isdir(dst):
             shutil.rmtree(dst)  # uncommitted leftover from a crashed run
-        rows, n_spans, per_file = 0, 0, []
+        per_file = {}
         if os.path.isdir(src):
             os.replace(src, dst)  # atomic publish
-            written = spark.read.parquet(dst)
-            rows = written.count()
-            n_spans = written.select(F.sum(F.size("spans"))).collect()[0][0] or 0
-            # per-output-partition lineage: one parquet file per write task
-            per_file = (
-                written.groupBy(F.input_file_name().alias("file"))
-                .count()
-                .collect()
-            )
+            # per-output-partition lineage: one parquet file per write task,
+            # its row count read from the file footer
+            per_file = {
+                f: pq.read_metadata(os.path.join(dst, f)).num_rows
+                for f in sorted(os.listdir(dst))
+                if f.endswith(".parquet")
+            }
         _commit_manifest(
             out_dir,
             {
                 "bucket": b,
                 "n_buckets": n_buckets,
-                "rows": rows,
-                "spans": int(n_spans),
+                "rows": observed[f"rows_{b}"],
+                "spans": observed[f"spans_{b}"],
                 # one shared extraction job: the scan+OCR wall is paid once
                 # for all pending buckets, not once per bucket
                 "wall_ms": job_wall_ms,
                 "job_buckets": len(pending),
                 "engine_version": __version__,
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                "files": {os.path.basename(r["file"]): r["count"] for r in per_file},
+                "files": per_file,
             },
         )
         committed.append(b)

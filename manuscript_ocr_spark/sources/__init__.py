@@ -4,7 +4,8 @@ Readers: the parquet media table IS the decodable image source (S1-S2
 analog; pipeline.load_fixture_tables reads it); binary-file directory scans
 map to spark.read.format('binaryFile') when images live on a filesystem.
 Sinks: extraction output parquet (pipeline / checkpoint), visualization
-sink (S8), metrics sink (S9: split_ocr_metrics + checkpoint manifests).
+sink (S8), metrics sink (S9: quarantine rows in the OCR output + checkpoint
+manifests filled from one Observation on the staged write).
 """
 
 from __future__ import annotations
@@ -52,7 +53,6 @@ def write_visualizations(media: DataFrame, weights: dict, cfg, out_path: str):
     import pandas as pd
 
     from ..models.glyphs import serialize_weights
-    from ..pipeline import make_ocr_udf  # noqa: F401 (session confs shared)
 
     spark = media.sparkSession
     wbc = spark.sparkContext.broadcast(serialize_weights(weights))

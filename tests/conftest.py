@@ -5,7 +5,7 @@ import pytest
 def spark():
     from manuscript_ocr_spark.session import get_spark
 
-    s = get_spark(master="local[*]", app_name="manuscript-ocr-spark-tests")
+    s = get_spark(app_name="manuscript-ocr-spark-tests")
     yield s
     s.stop()
 

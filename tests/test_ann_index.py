@@ -609,6 +609,29 @@ def test_ann_index_dir_distinguishes_same_basename_paths(tmp_path):
     assert a.rsplit("-", 2)[0] != b.rsplit("-", 2)[0]
 
 
+def test_extcorpus_build_removes_stranded_versions(
+    spark, sf_small_dir, tmp_path, monkeypatch
+):
+    """A fresh build of the extracted-corpus cache removes the tiers left
+    under an older extcorpus-* name and keeps its own live tier."""
+    import os
+
+    from manuscript_ocr_spark.functions.ocr import _extracted_docs_materialized
+
+    shutil.copytree(sf_small_dir, tmp_path / "sf-small")
+    monkeypatch.setenv("MSOCR_FIXTURES_DIR", str(tmp_path))
+    ann = tmp_path / "ann_index"
+    stranded = ann / "extcorpus-r7a" / "sf-small-11112222-aaaaaaaaaaaa-128"
+    (stranded / "docs.parquet").mkdir(parents=True)
+    (stranded / "docs.parquet" / "_SUCCESS").write_text("")
+
+    docs = _extracted_docs_materialized(spark, str(tmp_path / "sf-small"))
+    assert not (ann / "extcorpus-r7a").exists()
+    (live,) = os.listdir(ann / "extcorpus-r8a")
+    assert (ann / "extcorpus-r8a" / live / "docs.parquet" / "_SUCCESS").exists()
+    assert docs.count() > 0
+
+
 def test_ivf_kmeans_knn_join_batched_semantics_and_pruning(spark):
     """The batched EXACT join (round 6) must agree query-by-query with
     single-query ivf_kmeans_search under the same (nprobe, topk), and its

@@ -119,7 +119,7 @@ def test_extraction_over_q95_jpeg_media_equals_raw(tmp_path):
     from manuscript_ocr_spark.pipeline import extract_spans
     from manuscript_ocr_spark.session import get_spark
 
-    spark = get_spark(master="local[4]", app_name="jpeg-pipeline-test")
+    spark = get_spark(app_name="jpeg-pipeline-test")
     d = ensure_tier("sf-small")
     rows = pq.read_table(f"{d}/media.parquet").to_pylist()
     jt = pa.table(

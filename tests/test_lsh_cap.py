@@ -186,3 +186,41 @@ def test_cap_never_binds_on_testdata(spark):
     assert _spark_pairs(spark, sf, None) == _spark_pairs(
         spark, sf, DEFAULT_MAX_BUCKET_SIZE
     )
+
+
+def test_lsh_hot_bucket_cap(spark, tmp_path):
+    """The opt-in max_bucket_size guard drops degenerate buckets (one hot
+    band value shared by k docs would emit k²/2 pairs at corpus scale)
+    without touching pairs from healthy buckets — and the default (None)
+    keeps the exact oracle-mirrored semantics."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from manuscript_ocr_spark.functions.dedup import minhash_lsh_pairs
+
+    # 30 identical "template" docs (one hot bucket) + 2 genuine near-dups
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    docs = [(i, base, "en", "src0", len(base)) for i in range(30)]
+    near = "a manuscript page holds many lines of careful writing every day"
+    docs += [(100, near, "en", "src0", len(near)),
+             (101, near + " x", "en", "src0", len(near) + 2)]
+    tbl = pa.table(
+        {
+            "doc_id": pa.array([d[0] for d in docs], pa.int64()),
+            "text": [d[1] for d in docs],
+            "lang": [d[2] for d in docs],
+            "source": [d[3] for d in docs],
+            "n_chars": pa.array([d[4] for d in docs], pa.int64()),
+        }
+    )
+    sf = str(tmp_path)
+    pq.write_table(tbl, f"{sf}/documents.parquet")
+
+    full = minhash_lsh_pairs(spark, sf).collect()
+    capped = minhash_lsh_pairs(spark, sf, max_bucket_size=10).collect()
+    full_pairs = {(r["doc_a"], r["doc_b"]) for r in full}
+    capped_pairs = {(r["doc_a"], r["doc_b"]) for r in capped}
+    # uncapped: the 30-doc clique alone is 435 pairs
+    assert len(full_pairs) >= 435 + 1
+    # capped: the clique is gone, the genuine near-dup pair survives
+    assert capped_pairs == {(100, 101)}

@@ -240,7 +240,7 @@ def test_extract_spans_rejects_backboneless_real_weights():
     east_sd = synthetic_state_dict(east_manifest())  # no backbone.* keys
     trba_sd = synthetic_state_dict(trba_manifest(16, len(CHARSET)))
     w = build_real_weights(east_sd, trba_sd, CHARSET, hidden_size=16)
-    spark = get_spark(master="local[2]", app_name="np-twins-validate")
+    spark = get_spark(app_name="np-twins-validate")
     docs, media = load_fixture_tables(spark, ensure_tier("sf-small"))
     with pytest.raises(ValueError, match="backbone"):
         extract_spans(docs, media, weights=w)
@@ -253,7 +253,7 @@ def test_extract_spans_rejects_unresolvable_cnn_factory(real_weights):
 
     w = dict(real_weights)
     w["cnn_factory"] = "no_such_module:factory"
-    spark = get_spark(master="local[2]", app_name="np-twins-validate2")
+    spark = get_spark(app_name="np-twins-validate2")
     docs, media = load_fixture_tables(spark, ensure_tier("sf-small"))
     with pytest.raises(ModuleNotFoundError):
         extract_spans(docs, media, weights=w)

@@ -129,7 +129,7 @@ def test_extraction_over_png_media_equals_raw(tmp_path):
     from manuscript_ocr_spark.pipeline import extract_spans
     from manuscript_ocr_spark.session import get_spark
 
-    spark = get_spark(master="local[4]", app_name="png-pipeline-test")
+    spark = get_spark(app_name="png-pipeline-test")
     d = ensure_tier("sf-small")
     rows = pq.read_table(f"{d}/media.parquet").to_pylist()
     png_tbl = pa.table(
@@ -169,8 +169,8 @@ def test_extraction_over_png_media_equals_raw(tmp_path):
 
 def test_corrupt_codec_payload_skipped_not_fatal(tmp_path):
     """A corrupt PNG payload in the media table must not kill the job in
-    on_error='skip' mode: the page is dropped and counted in the per-task
-    metrics (the 10^12-scale posture for codec media too)."""
+    on_error='skip' mode: the page becomes one quarantine row carrying the
+    decoder's error (the 10^12-scale posture for codec media too)."""
     import pandas as pd  # noqa: F401
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -179,13 +179,10 @@ def test_corrupt_codec_payload_skipped_not_fatal(tmp_path):
     from manuscript_ocr_spark.models.east_tiny import DetectorConfig
     from manuscript_ocr_spark.models.glyphs import build_weights, serialize_weights
     from manuscript_ocr_spark.oracle import decode_media
-    from manuscript_ocr_spark.pipeline import (
-        ocr_media_lines,
-        split_ocr_metrics,
-    )
+    from manuscript_ocr_spark.pipeline import ocr_media_lines
     from manuscript_ocr_spark.session import get_spark
 
-    spark = get_spark(master="local[2]", app_name="codec-skip-test")
+    spark = get_spark(app_name="codec-skip-test")
     d = ensure_tier("sf-small")
     rows = pq.read_table(f"{d}/media.parquet").to_pylist()[:6]
     payloads = []
@@ -214,14 +211,21 @@ def test_corrupt_codec_payload_skipped_not_fatal(tmp_path):
     wbc = spark.sparkContext.broadcast(serialize_weights(build_weights()))
     out = ocr_media_lines(
         media, refs, wbc, DetectorConfig(target_size=PAGE_SIZE),
-        emit_metrics=True, on_error="skip",
-    )
-    data, metrics = split_ocr_metrics(out)
-    got_refs = {r["media_ref"] for r in data.collect()}
-    assert rows[0]["media_ref"] not in got_refs
+        on_error="skip",
+    ).collect()
+    # the quarantine row carries exactly what decoding the payload raises
+    with pytest.raises(Exception) as raised:
+        decode_media(payloads[0], rows[0]["height"], rows[0]["width"],
+                     rows[0]["channels"])
+    want_error = f"{type(raised.value).__name__}: {raised.value}"
+    quarantined = [r for r in out if r["error"] is not None]
+    assert len(quarantined) == 1
+    (bad,) = quarantined
+    assert bad["media_ref"] == rows[0]["media_ref"] and bad["lines"] is None
+    assert bad["error"] == want_error
+    got_refs = {r["media_ref"] for r in out if r["error"] is None}
     assert got_refs == {m["media_ref"] for m in rows[1:]}
-    m = metrics.agg({"errors": "sum", "pages": "sum"}).collect()[0]
-    assert m["sum(errors)"] == 1 and m["sum(pages)"] == 5
+    assert len(out) == 6
     # fail mode still raises (the invariant path's behavior)
     import pytest as _pytest
 

@@ -57,11 +57,20 @@ def test_resume_after_partial_failure(spark, small_tables, tmp_path):
     assert len(result["committed"]) == 2
     assert set(result["committed"]) | set(first) == {0, 1, 2, 3}
 
-    # manifests carry lineage
+    # manifests carry lineage, equal to a direct recount of the table
+    recount = {
+        r["bucket"]: (r["rows"], r["spans"])
+        for r in read_checkpointed(spark, out_dir)
+        .groupBy("bucket")
+        .agg(F.count("*").alias("rows"), F.sum(F.size("spans")).alias("spans"))
+        .collect()
+    }
     for b, m in committed_buckets(out_dir).items():
         assert m["engine_version"]
         assert m["wall_ms"] >= 0
-        assert m["rows"] >= 0
+        assert m["rows"] == recount.get(b, (0, 0))[0]
+        assert m["spans"] == recount.get(b, (0, 0))[1]
+        assert sum(m["files"].values()) == m["rows"]
         assert m["n_buckets"] == 4
 
     # final table == plain batch pipeline output
@@ -86,38 +95,55 @@ def test_rerun_is_noop(spark, small_tables, tmp_path):
     assert before == after
 
 
-def test_ocr_task_metrics(spark, small_tables):
-    from manuscript_ocr_spark.models.glyphs import build_weights, serialize_weights
-    from manuscript_ocr_spark.models.east_tiny import DetectorConfig
-    from manuscript_ocr_spark.fixtures import PAGE_SIZE
-    from manuscript_ocr_spark.pipeline import ocr_media_lines, split_ocr_metrics
+def test_checkpoint_submits_no_more_jobs_than_one_write(
+    spark, small_tables, tmp_path
+):
+    """The manifest lineage rides the staged write: checkpointing 4 fresh
+    buckets submits no more Spark jobs than the same extraction written
+    once with partitionBy (no per-bucket re-read jobs)."""
+    import uuid
+
+    from manuscript_ocr_spark.operators import bucket_of, extract_with_checkpoint
+    from manuscript_ocr_spark.pipeline import extract_spans
 
     docs, media = small_tables
-    wbc = spark.sparkContext.broadcast(serialize_weights(build_weights()))
-    refs = media.select("media_ref").distinct()
-    lines = ocr_media_lines(
-        media, refs, wbc, DetectorConfig(target_size=PAGE_SIZE), emit_metrics=True
+    sc = spark.sparkContext
+
+    def jobs_of(run):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    checkpointed = jobs_of(
+        lambda: extract_with_checkpoint(
+            docs, media, str(tmp_path / "ckpt"), n_buckets=4
+        )
     )
-    data, metrics = split_ocr_metrics(lines)
-    m = metrics.collect()
-    assert len(m) >= 1
-    assert sum(r["pages"] for r in m) == media.count()
-    assert all(r["wall_ms"] >= 0 and r["partition_id"] >= 0 for r in m)
-    # data rows are unaffected by the sentinel
-    assert data.filter(F.col("media_ref").startswith("__")).count() == 0
+    plain = jobs_of(
+        lambda: extract_spans(docs, media)
+        .withColumn("__bucket", bucket_of(F.col("doc_id"), 4))
+        .write.partitionBy("__bucket")
+        .parquet(str(tmp_path / "plain"))
+    )
+    assert 0 < checkpointed <= plain
 
 
 def test_on_error_skip_counts_corrupt_pages(spark, small_tables, tmp_path):
     """A corrupt payload fails the job in 'fail' mode (reference raises on
-    bad input) and is skipped-and-counted in 'skip' mode (the 10^12-scale
-    posture: a handful of bad blobs must not kill the run)."""
+    bad input) and becomes one quarantine row in 'skip' mode (the 10^12-
+    scale posture: a handful of bad blobs must not kill the run, and each
+    keeps its reason so it can be replayed through the oracle)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.errors.exceptions.captured import PythonException
 
     from manuscript_ocr_spark.fixtures import PAGE_SIZE
     from manuscript_ocr_spark.models import DetectorConfig, build_weights, serialize_weights
-    from manuscript_ocr_spark.pipeline import ocr_media_lines, split_ocr_metrics
+    from manuscript_ocr_spark.pipeline import ocr_media_lines
 
     docs, media = small_tables
     # corrupt table: 3 good pages + 1 truncated payload
@@ -144,14 +170,17 @@ def test_on_error_skip_counts_corrupt_pages(spark, small_tables, tmp_path):
     with pytest.raises(PythonException, match="raw payload is"):
         ocr_media_lines(bad_media, refs, wbc, cfg, on_error="fail").count()
 
-    lines = ocr_media_lines(
-        bad_media, refs, wbc, cfg, emit_metrics=True, on_error="skip"
-    )
-    data, metrics = split_ocr_metrics(lines)
-    m = metrics.collect()
-    assert sum(r["errors"] for r in m) == 1
-    assert sum(r["pages"] for r in m) == 3
-    assert data.select("media_ref").distinct().count() <= 3
+    out = ocr_media_lines(bad_media, refs, wbc, cfg, on_error="skip").collect()
+    quarantined = [r for r in out if r["error"] is not None]
+    assert len(quarantined) == 1
+    (bad,) = quarantined
+    assert bad["media_ref"] == "page-bad" and bad["lines"] is None
+    assert bad["error"].startswith("ValueError: ")
+    assert "raw payload is" in bad["error"]
+    good = [r for r in out if r["error"] is None]
+    assert len(good) == 3
+    assert {r["media_ref"] for r in good} == {r["media_ref"] for r in rows}
+    assert all(r["lines"] is not None for r in good)
 
 
 def test_incremental_streaming_matches_batch(spark, small_tables, tmp_path):
@@ -427,16 +456,12 @@ def test_dangling_media_ref_drops_span_keeps_doc(spark, small_tables):
 def test_hot_page_skew_ocr_runs_once(spark, small_tables):
     """Worst-case skew: EVERY doc references the SAME page. The distinct-ref
     design means the hot page is OCR'd exactly once regardless of fan-in
-    (metrics pages == 1), and each doc still gets its full span set — the
+    (per-task pages sum to 1), and each doc still gets its full span set — the
     north_rule skew tier ('pages with dense line counts' / hot docs) is
     defused structurally, not by salting alone."""
     from manuscript_ocr_spark.fixtures import PAGE_SIZE
     from manuscript_ocr_spark.models import DetectorConfig, build_weights, serialize_weights
-    from manuscript_ocr_spark.pipeline import (
-        extract_spans,
-        ocr_media_lines,
-        split_ocr_metrics,
-    )
+    from manuscript_ocr_spark.pipeline import extract_spans, ocr_media_lines
     from pyspark.sql.types import StringType
 
     docs, media = small_tables
@@ -469,11 +494,14 @@ def test_hot_page_skew_ocr_runs_once(spark, small_tables):
         .select(F.col("s.media_ref").alias("media_ref"))
         .distinct()
     )
-    lines = ocr_media_lines(
-        media, refs, wbc, DetectorConfig(target_size=PAGE_SIZE), emit_metrics=True
+    lines = ocr_media_lines(media, refs, wbc, DetectorConfig(target_size=PAGE_SIZE))
+    # the OCR task's partition is the one its page rows carry
+    per_task = (
+        lines.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(F.count("*").alias("pages"))
+        .collect()
     )
-    _, metrics = split_ocr_metrics(lines)
-    assert sum(r["pages"] for r in metrics.collect()) == 1
+    assert sum(r["pages"] for r in per_task) == 1
 
 
 def test_crash_mid_write_leaves_uncommitted_recomputable(

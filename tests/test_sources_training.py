@@ -1,11 +1,15 @@
 """S4/S5 training-data sources + F6 invalid-annotation filter vs a pure-
 Python mirror of the reference logic (detectors/_east/dataset.py:87-120;
-recognizers/_trba/data/dataset.py:214-260)."""
+recognizers/_trba/data/dataset.py:214-260), and the file-directory media
+source (S3) against the parquet media table."""
 
 import json
 
 import numpy as np
 import pytest
+
+from manuscript_ocr_spark.fixtures import PAGE_SIZE, ensure_tier
+from manuscript_ocr_spark.models.east_tiny import DetectorConfig
 
 
 COCO = {
@@ -92,3 +96,56 @@ def test_recognition_label_validation(spark, tmp_path):
 
     # empty label must classify as empty_label, not bad_row
     assert df.loc["b.png", "reason"] == "empty_label"
+
+
+@pytest.fixture(scope="module")
+def fixture_dir():
+    return ensure_tier("sf-small")
+
+
+def test_file_directory_ingestion_matches_table_path(spark, fixture_dir, tmp_path):
+    """S3 closure: pages living as FILES (binaryFile scan + filename-encoded
+    dims) must extract identically to the parquet media table — the
+    reference's file-index predict loop, columnar. Raw planes only (codec
+    decode is the documented env stub); 12 pages exercised end to end."""
+    import pyarrow.parquet as pq
+
+    from manuscript_ocr_spark.pipeline import extract_spans
+    from manuscript_ocr_spark.sources import media_from_raw_files
+
+    media_rows = pq.read_table(f"{fixture_dir}/media.parquet").to_pylist()[:12]
+    img_dir = tmp_path / "pages"
+    img_dir.mkdir()
+    refs = set()
+    for m in media_rows:
+        name = f"{m['media_ref']}_{m['width']}x{m['height']}x{m['channels']}.gray"
+        (img_dir / name).write_bytes(m["pixels"])
+        refs.add(m["media_ref"])
+
+    from pyspark.sql import functions as F
+
+    file_media = media_from_raw_files(spark, str(img_dir))
+    got_rows = {
+        r["media_ref"]: (r["width"], r["height"], r["channels"], bytes(r["pixels"]))
+        for r in file_media.collect()
+    }
+    assert set(got_rows) == refs
+    for m in media_rows:
+        assert got_rows[m["media_ref"]] == (
+            m["width"], m["height"], m["channels"], m["pixels"]
+        )
+
+    # end-to-end: extraction over file-backed media == table-backed media,
+    # on docs whose media spans all live in the file subset
+    docs = spark.read.parquet(f"{fixture_dir}/docs.parquet")
+    ok_docs = docs.filter(
+        F.forall(
+            "spans",
+            lambda s: (s["kind"] != "media") | s["media_ref"].isin(list(refs)),
+        )
+    ).limit(25)
+    table_media = spark.read.parquet(f"{fixture_dir}/media.parquet")
+    cfg = DetectorConfig(target_size=PAGE_SIZE)
+    a = {r["doc_id"]: r["spans"] for r in extract_spans(ok_docs, file_media, cfg=cfg).collect()}
+    b = {r["doc_id"]: r["spans"] for r in extract_spans(ok_docs, table_media, cfg=cfg).collect()}
+    assert len(a) > 0 and a == b

@@ -144,7 +144,7 @@ def test_real_models_fail_fast_on_driver():
     from manuscript_ocr_spark.pipeline import extract_spans, load_fixture_tables
     from manuscript_ocr_spark.session import get_spark
 
-    spark = get_spark(master="local[2]", app_name="twins-failfast")
+    spark = get_spark(app_name="twins-failfast")
     docs, media = load_fixture_tables(spark, ensure_tier("sf-small"))
     with pytest.raises(ValueError, match="backbone"):
         extract_spans(docs, media, weights=_real_weights())
